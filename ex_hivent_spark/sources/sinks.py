@@ -10,7 +10,8 @@ channel per topic; a naive Spark translation runs one streaming query
 per topic, re-reading the source N times. The multiplexer is the
 scale-correct shape: ONE streaming query, and inside each micro-batch
 the (cached) batch is routed to every topic's sink — one source pass
-regardless of consumer count.
+regardless of consumer count. Sinks are batch_id-keyed directories
+written with overwrite, so a replayed batch cannot duplicate rows.
 """
 
 from __future__ import annotations
@@ -42,8 +43,10 @@ def topic_multiplexer(
     """One pass over the stream, N topic-filtered parquet sinks.
 
     Each micro-batch is persisted once, then each topic's subset is
-    appended to its sink; the persist guarantees the source (and any
-    upstream computation) is evaluated once per batch, not per topic.
+    written to ``<sink>/batch_id=<id>`` with overwrite; the persist
+    guarantees the source (and any upstream computation) is evaluated
+    once per batch, not per topic. A batch replayed after a crash
+    overwrites its own directories instead of appending a second copy.
     """
 
     def route(batch: DataFrame, batch_id: int) -> None:
@@ -51,8 +54,8 @@ def topic_multiplexer(
         try:
             for topic, path in topic_sinks.items():
                 batch.filter(F.col(name_col) == F.lit(topic)).write.mode(
-                    "append"
-                ).parquet(path)
+                    "overwrite"
+                ).parquet(f"{path}/batch_id={batch_id}")
         finally:
             batch.unpersist()
 

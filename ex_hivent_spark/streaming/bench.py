@@ -1,13 +1,15 @@
 """Streaming micro-bench: throughput and per-batch latency through the
-one-pass multi-subscriber ``route()`` dispatch (consumer.py:154).
+one-pass multi-subscriber ``route()`` dispatch (``consumer.route`` and
+its per-batch body ``consumer.route_batch``).
 
 The batch suite (bench.py) times every registered query; this is the
 missing number for the streaming surface: rows/s through a 3-subscriber
 route() and the foreachBatch latency distribution, measured end-to-end
-(read → filter/repartition per subscription → ok/quarantine parquet
-sinks, checkpointed). Synthetic envelope events are generated JVM-side
-(spark.range + format_string — no Python row loop) and written as one
-parquet file per intended micro-batch (maxFilesPerTrigger=1).
+(read → one pinned evaluation of every subscription's check →
+concurrent ok/quarantine parquet sinks, checkpointed). Synthetic
+envelope events are generated JVM-side (spark.range + format_string —
+no Python row loop) and written as one parquet file per intended
+micro-batch (maxFilesPerTrigger=1).
 
 Numbers are wall-clock on a warm session; the point is (a) a recorded
 baseline so regressions in the dispatch path are visible round-over-

@@ -3,8 +3,9 @@ quarantine, on Structured Streaming.
 
 Reference lifecycle (lib/hivent/consumer.ex):
 - subscribe: join channel ``event:<topic>`` with ``partition_count``
-  (consumer.ex:105-107) → here: ``readStream`` + ``filter(name == topic)``
-  + ``repartition(partition_count, meta.key)``.
+  (consumer.ex:105-107) → here: ``readStream`` + ``filter(name == topic)``;
+  the partition is the envelope's ``partition_id``, stamped from the key
+  at emit time (envelope.enrich), so consuming needs no shuffle.
 - process: user ``process/1`` callback per event (consumer.ex:25, 68-81);
   ``:ok`` → done, ``{:error, reason}`` → quarantine the ``{event, queue}``
   pair (consumer.ex:98-100).
@@ -28,6 +29,7 @@ Processing supports two callback shapes:
 from __future__ import annotations
 
 import time
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 from typing import Any, Callable, Mapping
 
@@ -36,7 +38,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
-from ex_hivent_spark.envelope import DEFAULT_PARTITION_COUNT, EVENT_SCHEMA
+from ex_hivent_spark.envelope import EVENT_SCHEMA
 
 INGRESS_SCHEMA = T.StructType(
     [*EVENT_SCHEMA.fields, T.StructField("partition_id", T.IntegerType())]
@@ -45,12 +47,17 @@ INGRESS_SCHEMA = T.StructType(
 ProcessFn = Callable[[Mapping[str, Any]], "None | str"]
 
 
-def _error_column(process: "Column | ProcessFn") -> Column:
+def _error_column(process: "Column | ProcessFn", topic: str) -> Column:
+    """The subscription's error message (null = ok). It is evaluated on
+    the rows of ``topic`` only and is null on every other row, so a check
+    never sees another topic's payload."""
     if isinstance(process, Column):
-        return process
+        return F.when(F.col("name") == F.lit(topic), process)
 
     @F.udf("string")
     def _proc_udf(name, payload, version, uuid):
+        if name != topic:
+            return None
         try:
             result = process(
                 {"name": name, "payload": payload, "version": version, "uuid": uuid}
@@ -66,7 +73,8 @@ def _error_column(process: "Column | ProcessFn") -> Column:
 
 @dataclass
 class Consumer:
-    """One consumer group (``service``) over one topic."""
+    """One consumer group (``service``) over one topic: ``route`` with a
+    single subscription."""
 
     spark: SparkSession
     source_dir: str
@@ -76,53 +84,20 @@ class Consumer:
     checkpoint_dir: str
     processed_dir: str
     quarantine_dir: str
-    partition_count: int = DEFAULT_PARTITION_COUNT
 
-    def _stream(self) -> DataFrame:
-        raw = (
-            self.spark.readStream.schema(INGRESS_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(self.source_dir)
-        )
-        return raw.filter(F.col("name") == F.lit(self.topic)).repartition(
-            self.partition_count, F.col("meta.key")
-        )
-
-    def _handle_batch(self, batch: DataFrame, batch_id: int) -> None:
-        evaluated = batch.withColumn("error", _error_column(self.process)).withColumn(
-            "queue",
-            F.concat_ws(":", F.lit(self.service), F.col("partition_id").cast("string")),
-        )
-        # Single evaluation per row, two filtered writes (the reference's
-        # ok/quarantine split, consumer.ex:71-81). localCheckpoint
-        # materializes the batch once so a non-deterministic/stateful
-        # process callback cannot see a row twice across the two writes
-        # (costs one in-memory copy of the micro-batch — bounded by
-        # maxFilesPerTrigger).
-        evaluated = evaluated.localCheckpoint(eager=True)
-        ok = evaluated.filter(F.col("error").isNull()).drop("error")
-        failed = evaluated.filter(F.col("error").isNotNull()).withColumn(
-            "quarantined_at", F.current_timestamp()
-        )
-        # Idempotent replay: each write targets a batch_id-keyed partition
-        # directory with overwrite. If the stream crashes between the two
-        # writes (or before the checkpoint commits), the replayed batch
-        # overwrites the same directories instead of appending duplicates
-        # — this is what upgrades the source's at-least-once delivery to
-        # effectively-once *sink contents*.
-        ok.write.mode("overwrite").parquet(
-            f"{self.processed_dir}/batch_id={batch_id}"
-        )
-        failed.write.mode("overwrite").parquet(
-            f"{self.quarantine_dir}/batch_id={batch_id}"
+    @property
+    def subscription(self) -> Subscription:
+        return Subscription(
+            self.service,
+            self.topic,
+            self.process,
+            self.processed_dir,
+            self.quarantine_dir,
         )
 
     def start(self) -> StreamingQuery:
-        return (
-            self._stream()
-            .writeStream.foreachBatch(self._handle_batch)
-            .option("checkpointLocation", self.checkpoint_dir)
-            .start()
+        return route(
+            self.spark, self.source_dir, [self.subscription], self.checkpoint_dir
         )
 
     def run_available(self) -> None:
@@ -148,7 +123,70 @@ class Subscription:
     process: "Column | ProcessFn"
     processed_dir: str
     quarantine_dir: str
-    partition_count: int = DEFAULT_PARTITION_COUNT
+
+
+def route_batch(
+    batch: DataFrame, batch_id: int, subscriptions: list[Subscription]
+) -> None:
+    """Route one micro-batch to every subscription's ok and quarantine
+    sinks (the reference's ok/quarantine split, consumer.ex:71-81).
+
+    One job evaluates every subscription: the batch, filtered to the
+    subscribed topics, gains one error column per subscription and is
+    pinned with ``localCheckpoint``. The pin is what lets a
+    non-deterministic or stateful process callback see each row exactly
+    once across the ok and quarantine writes; all Python callbacks run
+    in that one job. The 2×N sink writes then start together from the
+    pin, so a batch costs 1 + 2×N jobs.
+
+    Idempotent replay: each write overwrites a batch_id-keyed directory.
+    If the stream crashes between writes (or before the checkpoint
+    commits), the replayed batch overwrites the same directories instead
+    of appending duplicates — effectively-once sink contents on an
+    at-least-once source. A failed write fails the batch, so the
+    checkpoint does not commit."""
+    base = batch.columns
+    pinned = (
+        batch.filter(F.col("name").isin(sorted({s.topic for s in subscriptions})))
+        .select(
+            *base,
+            *(
+                _error_column(sub.process, sub.topic).alias(f"_err{i}")
+                for i, sub in enumerate(subscriptions)
+            ),
+        )
+        .localCheckpoint(eager=True)
+    )
+
+    def _write(i: int, sub: Subscription, quarantine: bool) -> None:
+        error = F.col(f"_err{i}")
+        mine = F.col("name") == F.lit(sub.topic)
+        queue = F.concat_ws(
+            ":", F.lit(sub.service), F.col("partition_id").cast("string")
+        ).alias("queue")
+        if quarantine:
+            rows = pinned.where(mine & error.isNotNull()).select(
+                *base,
+                error.alias("error"),
+                queue,
+                F.current_timestamp().alias("quarantined_at"),
+            )
+            path = sub.quarantine_dir
+        else:
+            rows = pinned.where(mine & error.isNull()).select(*base, queue)
+            path = sub.processed_dir
+        rows.write.mode("overwrite").parquet(f"{path}/batch_id={batch_id}")
+
+    # Each write also builds its plan in its own thread, so driver-side
+    # analysis overlaps the other writes' jobs.
+    with ThreadPoolExecutor(max_workers=max(1, 2 * len(subscriptions))) as pool:
+        done = [
+            pool.submit(_write, i, sub, quarantine)
+            for i, sub in enumerate(subscriptions)
+            for quarantine in (False, True)
+        ]
+    for f in done:
+        f.result()
 
 
 def route(
@@ -158,79 +196,26 @@ def route(
     checkpoint_dir: str,
 ) -> StreamingQuery:
     """One-pass multi-subscriber dispatch: ONE readStream feeds every
-    subscription through a single foreachBatch — the reference's single
-    socket fanning out to N subscribers (channel_client.ex:363-390,
-    each with its own matcher + callback), where N separate Consumers
-    would re-read (and at 100 TB, re-shuffle) the source N times.
+    subscription through a single foreachBatch (``route_batch``) — the
+    reference's single socket fanning out to N subscribers
+    (channel_client.ex:363-390, each with its own matcher + callback),
+    where N separate queries would re-read the source N times.
 
-    Per micro-batch: the batch is materialized ONCE (localCheckpoint —
-    same single-evaluation guarantee as Consumer._handle_batch), then
-    each subscription applies its topic filter + process expression and
-    writes its own ok/quarantine sinks under batch_id-keyed directories
-    (idempotent overwrite on replay → effectively-once per sink, with
-    per-topic quarantine isolation). All subscriptions advance on the
-    shared checkpoint: one source offset log, N logical consumers.
-
-    r16 OPTIMIZATION (guide §2.6 — overlap independent jobs): the N
-    subscription slices are INDEPENDENT jobs over the one materialized
-    batch (disjoint topic filters, disjoint sink directories), yet the
-    serial loop left the cluster idle through each slice's write tail.
-    They now run from a small driver thread pool, so one slice's
-    checkpoint/write tail back-fills with the next slice's tasks —
-    Spark's scheduler happily runs several jobs at once; actions were
-    only sequential because this loop called them sequentially. FIFO
-    scheduling keeps the earlier slice prioritized (the back-fill
-    behavior the guide recommends); failures propagate via result
-    iteration, so a failed slice still fails the micro-batch and the
-    checkpoint does not commit (replay semantics unchanged)."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    def _dispatch(batch: DataFrame, batch_id: int, sub: Subscription) -> None:
-        slice_ = batch.filter(
-            F.col("name") == F.lit(sub.topic)
-        ).repartition(sub.partition_count, F.col("meta.key"))
-        evaluated = (
-            slice_.withColumn("error", _error_column(sub.process))
-            .withColumn(
-                "queue",
-                F.concat_ws(
-                    ":",
-                    F.lit(sub.service),
-                    F.col("partition_id").cast("string"),
-                ),
-            )
-            .localCheckpoint(eager=True)
-        )
-        ok = evaluated.filter(F.col("error").isNull()).drop("error")
-        failed = evaluated.filter(F.col("error").isNotNull()).withColumn(
-            "quarantined_at", F.current_timestamp()
-        )
-        ok.write.mode("overwrite").parquet(
-            f"{sub.processed_dir}/batch_id={batch_id}"
-        )
-        failed.write.mode("overwrite").parquet(
-            f"{sub.quarantine_dir}/batch_id={batch_id}"
-        )
-
-    def _handle(batch: DataFrame, batch_id: int) -> None:
-        batch = batch.localCheckpoint(eager=True)
-        # 2-3 jobs in flight is plenty (guide §2.6): enough to fill the
-        # write tail, not so many that they fight for executors.
-        with ThreadPoolExecutor(
-            max_workers=min(3, max(1, len(subscriptions)))
-        ) as pool:
-            for _ in pool.map(
-                lambda sub: _dispatch(batch, batch_id, sub), subscriptions
-            ):
-                pass
-
+    Each micro-batch is evaluated once, in one pinned job, and its 2×N
+    ok/quarantine writes run concurrently: 1 + 2×N jobs per batch, with
+    no shuffle. Sinks are batch_id-keyed directories (idempotent
+    overwrite on replay → effectively-once per sink), with per-topic
+    quarantine isolation. All subscriptions advance on the shared
+    checkpoint: one source offset log, N logical consumers."""
     raw = (
         spark.readStream.schema(INGRESS_SCHEMA)
         .option("maxFilesPerTrigger", 1)
         .parquet(source_dir)
     )
     return (
-        raw.writeStream.foreachBatch(_handle)
+        raw.writeStream.foreachBatch(
+            lambda batch, batch_id: route_batch(batch, batch_id, subscriptions)
+        )
         .option("checkpointLocation", checkpoint_dir)
         .start()
     )

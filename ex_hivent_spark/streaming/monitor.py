@@ -24,6 +24,18 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQueryListener
 
+# Micro-batch phases reported in a progress event's ``durationMs``, in
+# the order MicroBatchExecution runs them → record field. A phase a batch
+# did not run (e.g. no new data) is recorded as 0.
+PHASE_FIELDS = {
+    "latestOffset": "latest_offset_ms",
+    "walCommit": "wal_commit_ms",
+    "getBatch": "get_batch_ms",
+    "queryPlanning": "query_planning_ms",
+    "addBatch": "add_batch_ms",
+    "commitOffsets": "commit_offsets_ms",
+}
+
 PROGRESS_SCHEMA = T.StructType(
     [
         T.StructField("query_id", T.StringType()),
@@ -35,6 +47,7 @@ PROGRESS_SCHEMA = T.StructType(
         T.StructField("input_rows_per_second", T.DoubleType()),
         T.StructField("processed_rows_per_second", T.DoubleType()),
         T.StructField("batch_duration_ms", T.LongType()),
+        *(T.StructField(f, T.LongType()) for f in PHASE_FIELDS.values()),
         T.StructField("state_rows", T.LongType()),
         T.StructField("watermark", T.StringType()),
     ]
@@ -61,6 +74,7 @@ class ProgressMonitor(StreamingQueryListener):
     def onQueryProgress(self, event) -> None:
         p = json.loads(event.progress.json)
         state = p.get("stateOperators") or []
+        durations = p.get("durationMs") or {}
         self.records.append(
             {
                 "query_id": p.get("id"),
@@ -75,9 +89,8 @@ class ProgressMonitor(StreamingQueryListener):
                 "processed_rows_per_second": float(
                     p.get("processedRowsPerSecond") or 0.0
                 ),
-                "batch_duration_ms": (p.get("durationMs") or {}).get(
-                    "triggerExecution", 0
-                ),
+                "batch_duration_ms": durations.get("triggerExecution", 0),
+                **{f: durations.get(k, 0) for k, f in PHASE_FIELDS.items()},
                 "state_rows": sum(
                     s.get("numRowsTotal", 0) for s in state
                 ),

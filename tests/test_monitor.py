@@ -40,6 +40,11 @@ def test_progress_monitor_captures_batches(spark, tmp_path):
     df = m.metrics_df(spark)
     rows = df.filter("query_name = 'monitored_ingest'").collect()
     assert rows and all(r.batch_duration_ms >= 0 for r in rows)
+    # per-phase durations of every batch: present and non-negative
+    for f in monitor.PHASE_FIELDS.values():
+        assert all(getattr(r, f) is not None and getattr(r, f) >= 0 for r in rows), f
+    assert all(set(monitor.PHASE_FIELDS.values()) <= r.keys() for r in m.records)
+    assert any(r.add_batch_ms > 0 for r in rows)
     assert sum(r.num_input_rows for r in rows) == 500
     # a healthy local run should not be flagged as lagging everywhere:
     # lagging() must at least not crash and returns a list
@@ -51,3 +56,4 @@ def test_metrics_df_empty_capture_has_schema(spark):
     df = m.metrics_df(spark)
     assert df.count() == 0
     assert "processed_rows_per_second" in df.columns
+    assert set(monitor.PHASE_FIELDS.values()) <= set(df.columns)

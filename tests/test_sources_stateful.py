@@ -64,6 +64,35 @@ def test_topic_multiplexer_single_pass(spark, tmp_path):
     assert {r.name for r in a.select("name").distinct().collect()} == {"topic:a"}
 
 
+def test_topic_multiplexer_replay_does_not_duplicate(spark, tmp_path):
+    """A batch replayed after a crash (its commit never written)
+    overwrites its own sink directories instead of appending again."""
+    import os
+
+    ingress = str(tmp_path / "in")
+    em = StreamEmitter(spark, ingress, producer="svc")
+    em.emit("topic:a", {"i": 1}, version=1)
+    em.emit("topic:b", {"i": 2}, version=1)
+    em.emit("topic:a", {"i": 3}, version=1)
+
+    sinks = {"topic:a": str(tmp_path / "a"), "topic:b": str(tmp_path / "b")}
+    cp = str(tmp_path / "cp")
+
+    def run():
+        q = topic_multiplexer(stream_ingress(spark, ingress), sinks, cp)
+        q.processAllAvailable()
+        q.stop()
+        q.awaitTermination(30)
+        return [spark.read.parquet(sinks[t]).count() for t in sorted(sinks)]
+
+    assert run() == [2, 1]
+    commits = os.path.join(cp, "commits")
+    last = max((f for f in os.listdir(commits) if f.isdigit()), key=int)
+    for f in (last, f".{last}.crc"):
+        os.remove(os.path.join(commits, f))
+    assert run() == [2, 1]
+
+
 def test_stateful_running_totals(spark, tmp_path):
     import datetime as dt
 

@@ -12,7 +12,7 @@ import json
 import pytest
 from pyspark.sql import functions as F
 
-from ex_hivent_spark.streaming.consumer import Consumer
+from ex_hivent_spark.streaming.consumer import Consumer, route_batch
 from ex_hivent_spark.streaming.emitter import StreamEmitter
 from ex_hivent_spark.streaming.windows import (
     dedup_within_watermark,
@@ -40,7 +40,6 @@ def make_consumer(spark, dirs, process, topic="some:event"):
         checkpoint_dir=dirs["checkpoint"],
         processed_dir=dirs["processed"],
         quarantine_dir=dirs["quarantine"],
-        partition_count=2,
     )
 
 
@@ -428,20 +427,20 @@ class TestConsumerIdempotency:
         em.emit("some:event", {"response": "ok"}, version=1, key="k1")
         em.emit("some:event", {"response": "error"}, version=1, key="k2")
 
-        consumer = make_consumer(spark, dirs, make_process_response())
+        subs = [make_consumer(spark, dirs, make_process_response()).subscription]
         batch = spark.read.schema(
             spark.read.parquet(dirs["ingress"]).schema
         ).parquet(dirs["ingress"])
 
-        consumer._handle_batch(batch, batch_id=7)
+        route_batch(batch, 7, subs)
         once_ok = spark.read.parquet(dirs["processed"]).count()
         once_bad = spark.read.parquet(dirs["quarantine"]).count()
         # the crash-replay: same batch_id delivered again
-        consumer._handle_batch(batch, batch_id=7)
+        route_batch(batch, 7, subs)
         assert spark.read.parquet(dirs["processed"]).count() == once_ok == 1
         assert spark.read.parquet(dirs["quarantine"]).count() == once_bad == 1
         # a NEW batch id appends
-        consumer._handle_batch(batch, batch_id=8)
+        route_batch(batch, 8, subs)
         assert spark.read.parquet(dirs["processed"]).count() == 2
 
 
@@ -645,7 +644,6 @@ class TestMultiplexRoute:
                 process=make_process_response(),
                 processed_dir=a_ok,
                 quarantine_dir=a_bad,
-                partition_count=2,
             ),
             Subscription(
                 service="svc_b",
@@ -653,7 +651,6 @@ class TestMultiplexRoute:
                 process=make_process_response(),
                 processed_dir=b_ok,
                 quarantine_dir=b_bad,
-                partition_count=2,
             ),
         ]
         return subs, (a_ok, a_bad, b_ok, b_bad)
@@ -739,7 +736,6 @@ class TestMultiplexRoute:
                     process=make_process_response(),
                     processed_dir=ok_dir,
                     quarantine_dir=bad_dir,
-                    partition_count=2,
                 )
             )
         # inject: svc_b's ok sink path is a plain FILE, so the parquet
@@ -787,3 +783,215 @@ class TestMultiplexRoute:
         assert spark.read.parquet(
             f"{sink_dirs['svc_b']}/batch_id=*"
         ).count() == 1
+
+
+def _write_ingress(spark, path, events):
+    """Enriched envelopes for ``events`` ((topic, payload dict) pairs) as
+    ONE parquet file, so route() sees them in a single micro-batch."""
+    from ex_hivent_spark.envelope import enrich
+
+    raw = spark.createDataFrame(
+        [(t, json.dumps(p), 1) for t, p in events],
+        "name string, payload string, version int",
+    )
+    enrich(raw, producer="svc").coalesce(1).write.parquet(path)
+
+
+def make_strict_process(topic):
+    """A process/1 callable that raises on any event not of ``topic``."""
+
+    def process(event):
+        if event["name"] != topic:
+            raise ValueError(f"foreign event {event['name']}")
+        return None
+
+    return process
+
+
+def make_random_process(log_path):
+    """A process/1 callable with a random outcome that logs the uuid of
+    every event it is called on."""
+
+    def process(event):
+        import random
+
+        with open(log_path, "a") as f:
+            f.write(event["uuid"] + "\n")
+        return "unlucky" if random.random() < 0.5 else None
+
+    return process
+
+
+class TestRouteSubscriptions:
+    """route() with Column checks, shared topics, checks that must not
+    see other topics' events, and single evaluation per event."""
+
+    @staticmethod
+    def _sub(tmp_path, service, topic, process):
+        from ex_hivent_spark.streaming.consumer import Subscription
+
+        return Subscription(
+            service=service,
+            topic=topic,
+            process=process,
+            processed_dir=str(tmp_path / f"{service}_ok"),
+            quarantine_dir=str(tmp_path / f"{service}_bad"),
+        )
+
+    @staticmethod
+    def _route(spark, tmp_path, subs):
+        from ex_hivent_spark.streaming.consumer import route
+
+        q = route(spark, str(tmp_path / "ingress"), subs, str(tmp_path / "chk"))
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+            q.awaitTermination(30)
+
+    @staticmethod
+    def _vs(spark, path):
+        return sorted(
+            json.loads(r.payload)["v"]
+            for r in spark.read.parquet(path).select("payload").collect()
+        )
+
+    def test_column_checks(self, spark, tmp_path):
+        _write_ingress(
+            spark,
+            str(tmp_path / "ingress"),
+            [("topic:a", {"v": v}) for v in range(10)]
+            + [("topic:b", {"v": v}) for v in range(10)],
+        )
+        v = F.get_json_object("payload", "$.v").cast("int")
+        a = self._sub(tmp_path, "svc_a", "topic:a", F.when(v % 3 == 0, F.lit("div3")))
+        b = self._sub(tmp_path, "svc_b", "topic:b", F.when(v > 7, F.lit("big")))
+        self._route(spark, tmp_path, [a, b])
+
+        assert self._vs(spark, a.processed_dir) == [1, 2, 4, 5, 7, 8]
+        assert self._vs(spark, a.quarantine_dir) == [0, 3, 6, 9]
+        assert self._vs(spark, b.processed_dir) == list(range(8))
+        assert self._vs(spark, b.quarantine_dir) == [8, 9]
+        bad_a = spark.read.parquet(a.quarantine_dir).collect()
+        assert {r.error for r in bad_a} == {"div3"}
+        assert {r.name for r in bad_a} == {"topic:a"}
+        assert all(r.queue == f"svc_a:{r.partition_id}" for r in bad_a)
+
+    def test_two_services_same_topic(self, spark, tmp_path):
+        _write_ingress(
+            spark,
+            str(tmp_path / "ingress"),
+            [("topic:a", {"v": v}) for v in range(6)] + [("topic:b", {"v": 99})],
+        )
+        x = self._sub(tmp_path, "svc_x", "topic:a", F.lit(None).cast("string"))
+        y = self._sub(tmp_path, "svc_y", "topic:a", make_strict_process("topic:a"))
+        self._route(spark, tmp_path, [x, y])
+
+        for sub in (x, y):
+            ok = spark.read.parquet(sub.processed_dir).collect()
+            assert sorted(json.loads(r.payload)["v"] for r in ok) == list(range(6))
+            assert all(r.queue == f"{sub.service}:{r.partition_id}" for r in ok)
+            assert spark.read.parquet(sub.quarantine_dir).count() == 0
+
+    def test_column_check_never_sees_other_topics(self, spark, tmp_path):
+        """Under ANSI the check raises on topic:b's text ``v``; it must be
+        evaluated on topic:a's rows only, so the batch does not fail."""
+        ingress = str(tmp_path / "ingress")
+        _write_ingress(
+            spark,
+            ingress,
+            [("topic:a", {"v": v}) for v in (1, 5, 9)]
+            + [("topic:b", {"v": "text"}), ("topic:b", {"v": "more"})],
+        )
+        check = F.when(
+            F.expr("cast(get_json_object(payload, '$.v') as int)") > 4,
+            F.lit("big"),
+        )
+        ansi = spark.conf.get("spark.sql.ansi.enabled")
+        spark.conf.set("spark.sql.ansi.enabled", "true")
+        try:
+            with pytest.raises(Exception):
+                spark.read.parquet(ingress).select(check).collect()
+            a = self._sub(tmp_path, "svc_a", "topic:a", check)
+            b = self._sub(tmp_path, "svc_b", "topic:b", F.lit(None).cast("string"))
+            self._route(spark, tmp_path, [a, b])
+        finally:
+            spark.conf.set("spark.sql.ansi.enabled", ansi)
+
+        assert self._vs(spark, a.processed_dir) == [1]
+        assert self._vs(spark, a.quarantine_dir) == [5, 9]
+        assert spark.read.parquet(b.processed_dir).count() == 2
+
+    def test_python_callable_never_sees_other_topics(self, spark, tmp_path):
+        _write_ingress(
+            spark,
+            str(tmp_path / "ingress"),
+            [("topic:a", {"v": v}) for v in range(5)]
+            + [("topic:b", {"v": v}) for v in range(3)]
+            + [("topic:c", {"v": 0})],
+        )
+        subs = [
+            self._sub(tmp_path, "svc_a", "topic:a", make_strict_process("topic:a")),
+            self._sub(tmp_path, "svc_b", "topic:b", make_strict_process("topic:b")),
+        ]
+        self._route(spark, tmp_path, subs)
+
+        assert spark.read.parquet(subs[0].quarantine_dir).count() == 0
+        assert spark.read.parquet(subs[1].quarantine_dir).count() == 0
+        assert self._vs(spark, subs[0].processed_dir) == list(range(5))
+        assert self._vs(spark, subs[1].processed_dir) == list(range(3))
+
+    def test_random_outcome_lands_exactly_once(self, spark, tmp_path):
+        ingress = str(tmp_path / "ingress")
+        _write_ingress(
+            spark,
+            ingress,
+            [("topic:a", {"v": v}) for v in range(40)]
+            + [("topic:b", {"v": v}) for v in range(30)],
+        )
+        logs = {t: str(tmp_path / f"{t[-1]}.log") for t in ("topic:a", "topic:b")}
+        subs = [
+            self._sub(tmp_path, f"svc_{t[-1]}", t, make_random_process(log))
+            for t, log in logs.items()
+        ]
+        self._route(spark, tmp_path, subs)
+
+        events = spark.read.parquet(ingress).select("name", "meta.uuid").collect()
+        for sub in subs:
+            want = sorted(r.uuid for r in events if r.name == sub.topic)
+            got = [
+                r.uuid
+                for d in (sub.processed_dir, sub.quarantine_dir)
+                for r in spark.read.parquet(d).select("meta.uuid").collect()
+            ]
+            assert sorted(got) == want
+            # the callback ran exactly once per event of its own topic
+            with open(logs[sub.topic]) as f:
+                assert sorted(f.read().split()) == want
+
+    def test_sink_schemas(self, spark, tmp_path):
+        """The ok and quarantine sink columns (names, order, types)."""
+        _write_ingress(
+            spark, str(tmp_path / "ingress"), [("topic:a", {"v": v}) for v in range(4)]
+        )
+        v = F.get_json_object("payload", "$.v").cast("int")
+        subs = [
+            self._sub(tmp_path, "svc_c", "topic:a", F.when(v % 2 == 0, F.lit("even"))),
+            self._sub(tmp_path, "svc_p", "topic:a", make_random_process(
+                str(tmp_path / "calls.log")
+            )),
+        ]
+        self._route(spark, tmp_path, subs)
+
+        base = (
+            "name:string,payload:string,meta:struct<name:string,version:int,"
+            "producer:string,cid:string,uuid:string,key:string,"
+            "created_at:timestamp>,partition_id:int"
+        )
+        for sub in subs:
+            ok = spark.read.parquet(f"{sub.processed_dir}/batch_id=0")
+            bad = spark.read.parquet(f"{sub.quarantine_dir}/batch_id=0")
+            assert ok.schema.simpleString() == f"struct<{base},queue:string>"
+            assert bad.schema.simpleString() == (
+                f"struct<{base},error:string,queue:string,quarantined_at:timestamp>"
+            )
